@@ -166,21 +166,28 @@ def materialize_table(
     cmd/vaults/commands.go:851-921).  Only inserts materialize (append-only
     vaults, reference README.md:146).
     """
-    kv = F.map_from_entries(
-        F.transform("_columns", lambda c: F.struct(c["name"], c["value"]))
-    )
-    out = records.where(
-        (F.col("_table") == table) & (F.col("_action") == "I")
-    ).withColumn("_kv", kv)
-    cols = []
-    for name, pg_type in columns:
-        cols.append(_typed(F.element_at("_kv", name), pg_type).alias(name))
     meta = (
         [F.col(c) for c in ("_commit_lsn", "_tx_pos", "_xid", "_lsn", "_commit_ts")]
         if keep_metadata
         else []
     )
-    return out.select(*cols, *meta)
+    inserts = records.where((F.col("_table") == table) & (F.col("_action") == "I"))
+    return pivot_columns(inserts, columns, *meta)
+
+
+def pivot_columns(
+    records: DataFrame, columns: list[tuple[str, str]], *extra: Column
+) -> DataFrame:
+    """Typed `columns` out of each record's `_columns` array, plus `extra`;
+    no filtering, so the caller picks the table and the action."""
+    kv = F.map_from_entries(
+        F.transform("_columns", lambda c: F.struct(c["name"], c["value"]))
+    )
+    cols = [
+        _typed(F.element_at("_kv", name), pg_type).alias(name)
+        for name, pg_type in columns
+    ]
+    return records.withColumn("_kv", kv).select(*cols, *extra)
 
 
 def read_wal_batch(spark, path: str) -> DataFrame:

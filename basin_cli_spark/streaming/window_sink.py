@@ -5,32 +5,51 @@ reference                                   this engine
 ---------                                   -----------
 per-window embedded DuckDB file             micro-batch DataFrame
 ticker fires every windowInterval           trigger(processingTime=...)
-export: COPY t TO '<t>-<ns>.db.parquet'     batch.write.parquet(<t>-<batch>)
-empty-table guard (count(1) LIMIT 1)        df.isEmpty()
-sign (keccak256 + secp256k1)                functions/signing.sign_file
+export: COPY t TO '<t>-<ns>.db.parquet'     batch.write.parquet(<t>-<ns>)
+empty-table guard (count(1) LIMIT 1)        row count observed during the
+                                            write (DataFrame.observe)
+sign (keccak256 + secp256k1)                signs the cid part digests
+                                            (functions/signing.sign_file)
 upload + EventInfo row                      manifest JSONL row (cid-style
                                             content hash, ts, signature)
 LSN ack / crash recovery (UploadAll)        checkpointLocation + batch-id
                                             idempotence + startup sweep
 
+One micro-batch is one unit of work: its insert records are parsed once
+and persisted for the batch, each table's export is one Spark job (no
+emptiness probe; an export that observed no rows is deleted), each part
+file is hashed once for the cid and that digest is what gets signed, and
+the tables export concurrently on min(tables, defaultParallelism) threads
+that keep the stream's job group.  Manifest rows keep `schemas` order.
+
 Delivery is at-least-once with idempotent re-publish, the same boundary the
 reference has (duplicate upload possible between upload and cleanup,
 reference internal/app/db.go:303-314) — re-running a batch id is a no-op
 because the manifest is keyed on it.
+
+Cids are not reproducible across JVMs.  Three processes publishing the
+same seeded WAL gave three different cids: the data pages are equal, but
+the order of each column chunk's `encodings` list in the Parquet footer
+differs between processes.  Within one JVM the same batch gives the same
+bytes, so parity checks of cids and signatures compare within one JVM;
+byte-identical replay after a restart does not hold yet.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from basin_cli_spark.functions.hashing import keccak256, keccak256_file
 from basin_cli_spark.functions.signing import sign_file
-from basin_cli_spark.sources.cdc import materialize_table
+from basin_cli_spark.sources.cdc import pivot_columns
 
 
 class WindowedVaultSink:
@@ -89,15 +108,25 @@ class WindowedVaultSink:
         manifest)."""
         if batch_id in self._published_batches():
             return
-        rows: list[dict] = []
-        for table, columns in self.schemas.items():
-            tdf = materialize_table(records, table, columns)
-            if tdf.isEmpty():  # reference's empty-export guard (db.go:155-166)
-                continue
-            epoch_ns = time.time_ns()
-            path = os.path.join(self.out_dir, f"{table}-{epoch_ns}.parquet")
-            tdf.write.mode("overwrite").parquet(path)
-            rows.append(self._event_row(table, path, batch_id))
+        # The batch's JSON is parsed once; every table's export reads this.
+        inserts = (
+            records.where(F.col("_action") == "I").select("_table", "_columns").persist()
+        )
+        session = records.sparkSession
+        try:
+            cores = session.sparkContext.defaultParallelism
+            with ThreadPoolExecutor(max(1, min(len(self.schemas), cores))) as pool:
+                futures = [
+                    # Each wrapper takes its own copy of this thread's local
+                    # properties (the stream's job group among them) into
+                    # the pool thread that runs it.
+                    pool.submit(inheritable_thread_target(session)(self._export),
+                                inserts, table, columns, batch_id)
+                    for table, columns in self.schemas.items()
+                ]
+                rows = [row for row in (f.result() for f in futures) if row]
+        finally:
+            inserts.unpersist()
         self._append_manifest(rows)  # empty list still marks nothing; see below
         if not rows:
             # record the empty batch so recovery does not replay it forever
@@ -107,9 +136,25 @@ class WindowedVaultSink:
                   "is_archived": False}]
             )
 
+    def _export(
+        self, inserts: DataFrame, table: str, columns: list[tuple[str, str]], batch_id: int
+    ) -> dict | None:
+        """Write one table's inserts as a window and return its event row;
+        None, leaving no directory, when the batch has no insert for it."""
+        tdf = pivot_columns(inserts.where(F.col("_table") == table), columns)
+        path = os.path.join(self.out_dir, f"{table}-{time.time_ns()}.parquet")
+        seen = Observation()
+        tdf.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(path)
+        if seen.get["rows"] == 0:  # reference's empty-export guard (db.go:155-166)
+            shutil.rmtree(path)
+            return None
+        return self._event_row(table, path, batch_id)
+
     def _event_row(self, table: str, path: str, batch_id: int) -> dict:
         # content id: keccak over the parquet part files (sorted for
-        # determinism); signature over the same bytes when a key is set.
+        # determinism); each part's digest is also what gets signed.
         parts = sorted(
             os.path.join(path, p)
             for p in os.listdir(path)
@@ -148,7 +193,10 @@ class WindowedVaultSink:
             )
             digest = _digest_fn(canon, "_j")
         signature = (
-            b"".join(sign_file(p, self.private_key_hex) for p in parts).hex()
+            b"".join(
+                sign_file(p, self.private_key_hex, digest=d)
+                for p, d in zip(parts, part_digests)
+            ).hex()
             if self.private_key_hex
             else None
         )

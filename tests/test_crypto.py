@@ -2,9 +2,12 @@
 public keccak vectors."""
 
 import os
+import random
+import sys
 
 import pytest
 
+from basin_cli_spark.functions import hashing
 from basin_cli_spark.functions.hashing import keccak256, keccak256_file
 from basin_cli_spark.functions.signing import derive_address, sign_bytes, sign_file
 
@@ -75,3 +78,66 @@ def test_file_hash_chunking(tmp_path):
     data = os.urandom(10000)
     p.write_bytes(data)
     assert keccak256_file(str(p)) == keccak256(data)
+
+
+# ---------------------------------------------------------------------------
+# Native kernel vs the pure-Python reference
+
+
+def pure_keccak(data: bytes) -> bytes:
+    """Keccak-256 through the pure-Python kernel, whichever one is loaded."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(hashing, "_kernel", hashing._PythonKernel)
+        return keccak256(data)
+
+
+@pytest.fixture
+def native():
+    if hashing._kernel().name != "native":
+        pytest.skip(f"native keccak not loaded: {hashing.keccak_backend()}")
+
+
+# block edges (rate 136), the 4 KB file chunk edges, and 1 MB
+@pytest.mark.parametrize(
+    "n", [0, 1, 135, 136, 137, 271, 272, 4095, 4096, 4097, 1 << 20]
+)
+def test_native_matches_python(native, n):
+    data = random.Random(n).randbytes(n)
+    assert keccak256(data) == pure_keccak(data)
+
+
+def test_native_file_matches_python(native, tmp_path):
+    data = random.Random(7).randbytes(5 * 4096 + 77)  # six 4 KB reads
+    p = tmp_path / "multi_chunk.bin"
+    p.write_bytes(data)
+    assert keccak256_file(str(p)) == pure_keccak(data)
+
+
+def test_native_build_is_cached(native, tmp_path, monkeypatch):
+    """A cold cache compiles once into the cache dir and leaves only the
+    extension there; the next load reuses it."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    kernel = hashing._build_native()
+    built = os.listdir(tmp_path / "basin_cli_spark")
+    assert len(built) == 1 and built[0].endswith(".so"), built
+    mtime = os.path.getmtime(tmp_path / "basin_cli_spark" / built[0])
+    monkeypatch.setattr(hashing, "_kernel", lambda: kernel)
+    assert keccak256(b"abc").hex().startswith("4e03657a")
+    hashing._build_native()
+    assert os.path.getmtime(tmp_path / "basin_cli_spark" / built[0]) == mtime
+
+
+def test_fallback_when_native_fails_to_load(monkeypatch):
+    """With cffi unimportable the loader falls back to pure Python, says
+    why, and still meets the known-answer vectors and the golden
+    signature."""
+    monkeypatch.setitem(sys.modules, "cffi", None)
+    kernel = hashing._load_kernel()
+    assert kernel.name == "python" and "cffi" in kernel.reason
+    monkeypatch.setattr(hashing, "_kernel", lambda: kernel)
+    assert hashing.keccak_backend() == f"python ({kernel.reason})"
+    test_keccak_empty()
+    test_keccak_abc()
+    test_keccak_multiblock()
+    test_golden_signature()
+    test_derive_address()

@@ -137,6 +137,90 @@ def test_events_metadata_surface(spark, dirs):
     assert len(rows) == 1 and rows[0].cid.startswith("0x")
 
 
+def _parts(path):
+    return sorted(os.path.join(path, p) for p in os.listdir(path) if p.endswith(".parquet"))
+
+
+def _assert_matches_reference(row):
+    """The row's cid and signature, recomputed from its parts on disk with
+    the pure-Python keccak: whole-file keccak for one part, keccak over
+    the concatenated part digests otherwise; one 65-byte signature per
+    part over that part's digest."""
+    from basin_cli_spark.functions.signing import sign_digest
+    from tests.test_crypto import pure_keccak
+
+    parts = _parts(row["path"])
+    digests = []
+    for p in parts:
+        with open(p, "rb") as f:
+            digests.append(pure_keccak(f.read()))
+    cid = digests[0] if len(digests) == 1 else pure_keccak(b"".join(digests))
+    assert row["cid"] == "0x" + cid.hex()
+    sig = bytes.fromhex(row["signature"])
+    assert len(sig) == 65 * len(parts)
+    for i, d in enumerate(digests):
+        assert sig[65 * i : 65 * (i + 1)] == sign_digest(d, PRIV)
+
+
+def test_cids_and_signatures_match_reference(spark, dirs, tmp_path):
+    """Single-part windows (a drain) and a multi-part window (a batch
+    spread over three partitions) both recompute from disk."""
+    from basin_cli_spark.sources.cdc import read_wal_batch
+
+    wal_dir, out_dir, ckpt = dirs
+    sink = WindowedVaultSink(out_dir, SCHEMAS, private_key_hex=PRIV)
+    _write_tx(wal_dir, "tx1.jsonl", TX1)
+    _drain(spark, wal_dir, sink, ckpt)
+    _write_tx(wal_dir, "tx2.jsonl", TX2)
+    _drain(spark, wal_dir, sink, ckpt)
+    rows = [m for m in _manifest(sink) if m["table"] == "t"]
+    assert len(rows) == 2
+    for row in rows:
+        _assert_matches_reference(row)
+
+    spread = WindowedVaultSink(str(tmp_path / "spread"), SCHEMAS, private_key_hex=PRIV)
+    spread.process_batch(read_wal_batch(spark, wal_dir).repartition(3), batch_id=0)
+    (row,) = _manifest(spread)
+    assert len(_parts(row["path"])) > 1
+    _assert_matches_reference(row)
+
+
+def test_table_without_inserts_publishes_nothing(spark, dirs):
+    """A table whose batch records are all U/D gets no manifest row and no
+    directory, and costs no Spark job of its own: one write job per table
+    and no emptiness probe, so at most 2 jobs for 2 tables."""
+    import uuid
+
+    from basin_cli_spark.sources.cdc import read_wal_batch
+
+    wal_dir, out_dir, _ = dirs
+    schemas = {**SCHEMAS, "u": [("id", "integer"), ("name", "text")]}
+    u_only = {
+        "commit_lsn": 957398400,
+        "records": [
+            {**TX2["records"][0], "table": "u"},
+            {**TX2["records"][0], "table": "u", "action": "D", "lsn": "0/3910B999"},
+        ],
+    }
+    _write_tx(wal_dir, "tx1.jsonl", TX1)
+    _write_tx(wal_dir, "u.jsonl", u_only)
+    sink = WindowedVaultSink(out_dir, schemas, private_key_hex=PRIV)
+    records = read_wal_batch(spark, wal_dir)
+
+    sc = spark.sparkContext
+    group = f"empty-table-{uuid.uuid4()}"
+    sc.setJobGroup(group, "empty-table export")
+    try:
+        sink.process_batch(records, batch_id=0)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+
+    assert [m["table"] for m in _manifest(sink)] == ["t"]
+    assert not [d for d in os.listdir(out_dir) if d.startswith("u-")]
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
 def test_stateful_progress_across_restarts(spark, tmp_path):
     """applyInPandasWithState keeps per-key state across micro-batches AND
     restarts (the reference's confirmed_flush_lsn durability,
