@@ -15,10 +15,13 @@ call:
 * native — Keccak-f[1600] in C (`_C_SOURCE`), built with cffi in API mode
   the first time a digest is taken.  The extension is cached under
   ``$XDG_CACHE_HOME/basin_cli_spark`` (``~/.cache`` when unset), named by a
-  hash of the C source, the cffi version and the interpreter's ABI tag.  It
-  is compiled in a temporary directory and moved into place with
+  hash of the C source, the cffi version and the interpreter's ABI tag.  A
+  child Python process compiles it, because cffi's build changes the
+  working directory, which every thread of the caller shares.  It builds
+  in a temporary directory and the result is moved into place with
   ``os.replace``, so a concurrent first use never loads a half-written
-  file.  cffi releases the GIL for the call, so threads hash in parallel.
+  file; within one process a lock lets only the first caller build.  cffi
+  releases the GIL for the call, so threads hash in parallel.
 * python — the pure-Python `_keccak_f`, used when the native build or its
   import fails (no compiler, no cffi, read-only cache).  It is also the
   reference the tests compare the native kernel against.
@@ -32,14 +35,16 @@ file hash (4096-byte reads, signing.go:79).
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import importlib.util
+import json
 import os
 import struct
+import subprocess
 import sys
 import sysconfig
 import tempfile
+import threading
 
 _MASK = (1 << 64) - 1
 RATE = 136  # bytes absorbed per permutation (capacity 512 bits)
@@ -203,6 +208,36 @@ def _cache_dir() -> str:
     return os.path.join(base, "basin_cli_spark")
 
 
+# Run in a child process: cffi's compile changes the working directory,
+# which is shared by every thread of this one (the sink hashes on a pool).
+_BUILD_SCRIPT = """
+import json, sys
+import cffi
+a = json.load(sys.stdin)
+ffi = cffi.FFI()
+ffi.cdef(a["cdef"])
+ffi.set_source(a["modname"], a["source"], extra_compile_args=a["cflags"])
+ffi.compile(tmpdir=".", verbose=False)
+"""
+
+
+def _compile_native(modname: str, so_path: str) -> None:
+    """Compile the kernel in a child process and move it to ``so_path``."""
+    cache = os.path.dirname(so_path)
+    os.makedirs(cache, exist_ok=True)
+    args = {"cdef": _CDEF, "source": _C_SOURCE, "cflags": _CFLAGS, "modname": modname}
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        proc = subprocess.run(
+            [sys.executable, "-c", _BUILD_SCRIPT],
+            input=json.dumps(args), cwd=tmp, capture_output=True, text=True, timeout=300,
+        )
+        built = os.path.join(tmp, os.path.basename(so_path))
+        if proc.returncode != 0 or not os.path.exists(built):
+            last = (proc.stderr.strip().splitlines() or ["no output"])[-1]
+            raise RuntimeError(f"kernel build exited {proc.returncode}: {last}")
+        os.replace(built, so_path)
+
+
 def _build_native() -> _NativeKernel:
     """Load the cached C kernel, compiling it first if it is not there."""
     import cffi
@@ -210,15 +245,9 @@ def _build_native() -> _NativeKernel:
     parts = (_CDEF, _C_SOURCE, *_CFLAGS, cffi.__version__, sys.implementation.cache_tag)
     key = hashlib.sha256("\0".join(parts).encode()).hexdigest()[:16]
     modname = f"_keccak_{key}"
-    cache = _cache_dir()
-    so_path = os.path.join(cache, modname + sysconfig.get_config_var("EXT_SUFFIX"))
+    so_path = os.path.join(_cache_dir(), modname + sysconfig.get_config_var("EXT_SUFFIX"))
     if not os.path.exists(so_path):
-        os.makedirs(cache, exist_ok=True)
-        ffi = cffi.FFI()
-        ffi.cdef(_CDEF)
-        ffi.set_source(modname, _C_SOURCE, extra_compile_args=_CFLAGS)
-        with tempfile.TemporaryDirectory(dir=cache) as tmp:
-            os.replace(ffi.compile(tmpdir=tmp, verbose=False), so_path)
+        _compile_native(modname, so_path)
     spec = importlib.util.spec_from_file_location(modname, so_path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -235,9 +264,19 @@ def _load_kernel():
         return _PythonKernel(reason=f"{type(exc).__name__}: {exc}")
 
 
-@functools.cache
+_loaded = None
+_load_lock = threading.Lock()
+
+
 def _kernel():
-    return _load_kernel()
+    """The kernel in use, loaded once; the first hashes of a process may
+    come from several pool threads at once, and only one may build."""
+    global _loaded
+    if _loaded is None:
+        with _load_lock:
+            if _loaded is None:
+                _loaded = _load_kernel()
+    return _loaded
 
 
 def keccak_backend() -> str:

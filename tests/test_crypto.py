@@ -4,6 +4,8 @@ public keccak vectors."""
 import os
 import random
 import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -125,6 +127,49 @@ def test_native_build_is_cached(native, tmp_path, monkeypatch):
     assert keccak256(b"abc").hex().startswith("4e03657a")
     hashing._build_native()
     assert os.path.getmtime(tmp_path / "basin_cli_spark" / built[0]) == mtime
+
+
+def test_cold_build_from_threads_keeps_cwd(native, tmp_path, monkeypatch):
+    """First hashes from several threads on a cold cache build the kernel
+    once, and never move the process's working directory while other
+    threads resolve relative paths."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.setattr(hashing, "_loaded", None)
+    builds = []
+    compile_native = hashing._compile_native
+
+    def counted(*args):
+        builds.append(args)
+        compile_native(*args)
+
+    monkeypatch.setattr(hashing, "_compile_native", counted)
+    cwd = os.getcwd()
+    seen, done = set(), threading.Event()
+
+    def watch():
+        while not done.is_set():
+            seen.add(os.getcwd())
+
+    watcher = threading.Thread(target=watch)
+    watcher.start()
+    start = threading.Barrier(4)
+
+    def first_hash(i):
+        start.wait()
+        return keccak256(bytes([i]) * 1000)
+
+    try:
+        with ThreadPoolExecutor(4) as pool:
+            digests = list(pool.map(first_hash, range(4)))
+    finally:
+        done.set()
+        watcher.join()
+    assert seen == {cwd} and os.getcwd() == cwd
+    assert len(builds) == 1
+    assert hashing._kernel().name == "native"
+    built = os.listdir(tmp_path / "basin_cli_spark")
+    assert len(built) == 1 and built[0].endswith(".so"), built
+    assert digests == [pure_keccak(bytes([i]) * 1000) for i in range(4)]
 
 
 def test_fallback_when_native_fails_to_load(monkeypatch):
